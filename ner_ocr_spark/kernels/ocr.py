@@ -9,7 +9,7 @@ with a testable classical pipeline (SURVEY.md §2.8 M1/M2):
     cell segmentation (vertical projection) -> glyph template classification.
 
 Every stage is a pure function; the Spark side wraps `ocr_page` /
-`recognize_batch` in `mapInPandas` (see operators/extract.py). Emits the
+`ocr_page_fine` in `mapInPandas` (see operators/extract.py). Emits the
 reference's OCRResult shape per line: (poly, box, text, score)
 (/root/reference/src/custom_types/data.py:12-22).
 """
@@ -150,29 +150,6 @@ def estimate_skew(
         if o > best_obj:
             best_obj, best_angle = o, float(ang)
     return best_angle
-
-
-def rotate_mask(mask: np.ndarray, angle_deg: float) -> np.ndarray:
-    """Nearest-neighbor rotation of a boolean mask about the center,
-    output canvas expanded to fit."""
-    if abs(angle_deg) < 1e-9:
-        return mask
-    h, w = mask.shape
-    r = math.radians(angle_deg)
-    c, s = math.cos(r), math.sin(r)
-    nh = int(abs(h * c) + abs(w * s) + 1)
-    nw = int(abs(w * c) + abs(h * s) + 1)
-    cy, cx = (h - 1) / 2.0, (w - 1) / 2.0
-    ncy, ncx = (nh - 1) / 2.0, (nw - 1) / 2.0
-    # inverse map: dest -> src (separable outer sums, see rotate_gray)
-    dy = (np.arange(nh, dtype=np.float32) - ncy)
-    dx = (np.arange(nw, dtype=np.float32) - ncx)
-    sy = np.round((c * dy + cy)[:, None] + (s * dx)[None, :]).astype(np.int64)
-    sx = np.round((-s * dy + cx)[:, None] + (c * dx)[None, :]).astype(np.int64)
-    valid = (sy >= 0) & (sy < h) & (sx >= 0) & (sx < w)
-    out = np.zeros((nh, nw), dtype=bool)
-    out[valid] = mask[sy[valid], sx[valid]]
-    return out
 
 
 def rotate_gray(gray: np.ndarray, angle_deg: float, bg: int) -> np.ndarray:
@@ -496,6 +473,21 @@ def ocr_page(png_bytes: bytes, max_side_limit: int = MAX_SIDE_LIMIT) -> list[Lin
             x0, x1 = max(int(xs.min()) - 2, 0), min(int(xs.max()) + 3, gray.shape[1])
             gray = gray[y0:y1, x0:x1]
         gray = rotate_gray(gray, angle, bg)
+        mask = despeckle(binarize(gray))
+    return recognize_mask(mask)
+
+
+def ocr_page_fine(png_bytes: bytes) -> list[LineResult]:
+    """Second-pass recognition with a finer deskew grid (step 0.05 vs
+    ocr_page's 0.25; the analog of the reference's TrOCR enhancement,
+    ner-ocr src/ui/app.py:525-538). Unlike ocr_page it rotates the whole
+    resized page, with no noise erase and no ink-box crop, so its line
+    segmentation can differ from the first pass's."""
+    gray = bounded_resize(decode_gray(png_bytes), MAX_SIDE_LIMIT)
+    mask = despeckle(binarize(gray))
+    angle = estimate_skew(mask, step=0.05)
+    if abs(angle) > 1e-9:
+        gray = rotate_gray(gray, angle, int(np.median(gray)))
         mask = despeckle(binarize(gray))
     return recognize_mask(mask)
 

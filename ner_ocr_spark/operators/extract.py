@@ -1,9 +1,12 @@
-"""mapInPandas stages: vectorized OCR and batched NER.
+"""mapInPandas stages: vectorized OCR, its refine pass, and batched
+html extraction + NER.
 
-The engine's two Python-side operators (everything else is JVM-side SQL).
-Both follow the Spark ML-inference pattern (SURVEY.md §2.8 M1-M6): state
-built once per python worker, Arrow-batched iterators, per-row error
-absorption into an `error` column (failures never kill the job,
+The engine's Python-side operators (everything else is JVM-side SQL).
+Each is a plain function over an iterator of pandas batches, so it runs
+and tests without Spark. All follow the Spark ML-inference pattern
+(SURVEY.md §2.8 M1-M6): state built once per python worker,
+Arrow-batched iterators, per-row error absorption into an `error`
+column (failures never kill the job,
 /root/reference/src/pipelines/base.py:44-57 semantics), and an in-batch
 wall-clock guard replacing the reference's thread-pool timeout
 (/root/reference/src/utils.py:21-46).
@@ -39,15 +42,6 @@ OCR_SCHEMA = T.StructType(
     ]
 )
 
-def ocr_ner_schema() -> T.StructType:
-    """OCR_SCHEMA + the NER columns (fused-stage output)."""
-    return T.StructType(
-        list(OCR_SCHEMA.fields)
-        + [T.StructField("entities", ENTITY_TYPE, True),
-           T.StructField("bio", T.StringType(), True)]
-    )
-
-
 ENTITY_TYPE = T.ArrayType(
     T.StructType(
         [
@@ -59,59 +53,126 @@ ENTITY_TYPE = T.ArrayType(
     )
 )
 
+# the columns a tagging stage appends
+NER_FIELDS = [T.StructField("entities", ENTITY_TYPE, True),
+              T.StructField("bio", T.StringType(), True)]
+
+# fused OCR + NER stage output
+OCR_NER_SCHEMA = T.StructType(list(OCR_SCHEMA.fields) + NER_FIELDS)
+
+# the reference's per-batch OCR budget (ner-ocr config.yaml:3): once a
+# batch has run this long, its remaining rows become timeout error rows
+BATCH_TIMEOUT_S = 400.0
+
+# line_idx of line l on pdf page p is p * PAGE_STRIDE + l, so multi-page
+# spans keep one global line order
+PAGE_STRIDE = 100000
+
+
+def _entity_rows(ents) -> list[dict]:
+    return [{"entity_type": e.entity_type, "surface": e.surface,
+             "start": e.start, "end": e.end} for e in ents]
+
+
+def _page_reader(
+    pdf_rasterizer: Callable[[bytes, float], list[bytes]] | str | None,
+    pdf_zoom: float,
+    pdf_max_pages: int | None,
+) -> Callable[[bytes], list[bytes | str]]:
+    """blob -> page list, shared by the OCR and refine stages. A blob
+    sniffing as PDF (%PDF- magic) expands to its rasterized pages,
+    truncated to pdf_max_pages (the reference's max_num_imgs); any other
+    blob is its own single page. A page is image bytes, or a str of
+    newline-joined lines for a born-digital page. pdf_rasterizer "auto"
+    resolves to operators/pdf.default_page_source; None leaves PDF blobs
+    as single pages, which then fail to decode as images (per-row error)."""
+    if pdf_rasterizer == "auto":
+        from ner_ocr_spark.operators.pdf import default_page_source
+
+        pdf_rasterizer = default_page_source()
+
+    def read(blob: bytes) -> list[bytes | str]:
+        if pdf_rasterizer is None or blob[:5] != b"%PDF-":
+            return [blob]
+        pages = pdf_rasterizer(blob, pdf_zoom)[:pdf_max_pages]
+        return [p if isinstance(p, str) else bytes(p) for p in pages]
+
+    return read
+
+
+def _recognize(page: bytes | str, refine_below: float | None):
+    """(first-pass lines, refined lines or None) for one page. A str page
+    is a born-digital text layer: its lines, exact, at score 1.0, no OCR.
+    An image page OCRs; when a line scores below refine_below, the
+    fine-deskew second pass (the M2 analog) runs too. Refined lines pair
+    with first-pass lines by index, so when the fine pass segments the
+    page differently the whole pass that scored higher becomes the first
+    pass and nothing is refined. A failing fine pass keeps the first."""
+    from ner_ocr_spark.kernels import ocr
+
+    if isinstance(page, str):
+        return [ocr.LineResult(t, None, None, 1.0)
+                for t in page.split("\n") if t], None
+    lines = ocr.ocr_page(page)
+    if refine_below is None or not any(lr.score < refine_below for lr in lines):
+        return lines, None
+    try:
+        t_lines = ocr.ocr_page_fine(page)
+    except Exception:  # noqa: BLE001 — keep the first pass
+        return lines, None
+    if len(t_lines) == len(lines):
+        return lines, t_lines
+
+    def mean_score(ls):
+        return sum(lr.score for lr in ls) / max(len(ls), 1)
+
+    return (t_lines if mean_score(t_lines) > mean_score(lines) else lines), None
+
 
 def make_ocr_stage(
     blob_resolver: Callable[[str], bytes] | None = None,
-    batch_timeout_s: float = 400.0,
-    max_side_limit: int = 1500,
-    min_score: float | None = None,
     refine_below: float | None = None,
     gazetteer: list[tuple[str, str]] | None = None,
-    kind_label: str = "media",
-    pdf_rasterizer: Callable[[bytes, float], list[bytes]] | None = None,
+    pdf_rasterizer: Callable[[bytes, float], list[bytes]] | str | None = None,
     pdf_max_pages: int | None = None,
     pdf_zoom: float = 2.0,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """Build the OCR mapInPandas function.
+    """Build the fused OCR mapInPandas function.
 
-    Input batches: (doc_id, span_idx, media_ref[, image_png][, line_base]).
-    If an `image_png` column is present (blobs joined upstream, or PDF
-    pages rasterized upstream) it is used; a NULL image_png — and the
-    column's absence — falls back to `blob_resolver(media_ref)`, the
-    production shape where media_ref points into an object store and the
-    fetch happens executor-side (no image bytes ever shuffle). An optional
-    `line_base` column offsets the emitted line_idx — the PDF branch uses
-    page_idx * 100000 so multi-page spans keep one global line order.
+    Input batches: (doc_id, span_idx, kind, media_ref[, image_png]). A
+    non-NULL `image_png` (blobs joined upstream) is the span's blob;
+    otherwise `blob_resolver(media_ref)` fetches it executor-side (the
+    production shape: media_ref points into an object store, so image
+    bytes never shuffle; default: the synthetic corpus renderer). PDF
+    blobs expand to pages in-stage (see _page_reader); page images OCR,
+    born-digital pages emit their text-layer lines exactly at score 1.0.
 
-    Output: OCR_SCHEMA, one row per recognized line, line_idx ordered
-    top-to-bottom; a failed row degrades to a single (text=None, error=...)
-    row so reassembly still sees the span (M6 error absorption).
-    batch_timeout_s mirrors the reference's 400 s OCR budget
-    (/root/reference/config.yaml:3): on breach, remaining rows in the batch
-    emit timeout-error rows instead of running.
+    Output: OCR_SCHEMA, one row per line, line_idx top to bottom (page
+    base p * PAGE_STRIDE). Every line's text is normalized in-stage with
+    the P4 rule: the refined text wins when it normalizes non-blank (python
+    twin of operators/normalize.refined_text_expr, pinned by tests). A
+    page with no lines, or a PDF with no pages, emits one no-lines row
+    (text '', score 0.0); the caller filters blank rows. A failed span
+    degrades to one error row (text NULL, error set, never normalized or
+    tagged) so reassembly still sees it (M6 error absorption). Once a
+    batch has spent BATCH_TIMEOUT_S, its remaining rows become `timeout:`
+    error rows instead of running.
 
-    When `gazetteer` is given, the stage also normalizes each recognized
-    line (python twin of operators/normalize.normalize_expr — pinned equal
-    by tests) and appends entities/bio columns: media rows then cross the
-    Python boundary exactly ONCE (OCR+normalize+NER fused) instead of
-    OCR -> JVM normalize -> second python NER hop.
+    refine_below: pages holding a line scored below it get the fine-deskew
+    second pass (see _recognize); its lines ride transformer_text/score,
+    never overwriting the first pass.
 
-    When `pdf_rasterizer` is given, blobs sniffing as PDF (%PDF- magic)
-    expand to pages IN-STAGE — each page OCRs with line_idx base
-    page_idx * 100000 and `pdf_max_pages` truncates the page list
-    (reference max_num_imgs, /root/reference/src/pdf_processing.py:21-73).
-    Fusing the 1:N expansion here (rather than a separate pdf branch with
-    its own mapInPandas + posexplode, the round-2 design) keeps the plan at
-    ONE source scan, ONE shuffle and ONE python crossing for mixed corpora,
-    and page bitmaps never serialize through Arrow at all. A successfully
-    parsed zero-page PDF emits one clean no-lines row (never falls back to
-    decoding the PDF blob as an image — round-2 ADVICE).
+    With a gazetteer the stage also tags every clean row and appends
+    entities/bio (OCR_NER_SCHEMA): media rows then cross the Python
+    boundary exactly once.
     """
     from ner_ocr_spark import corpus
-    from ner_ocr_spark.kernels import ocr
     from ner_ocr_spark.kernels.normalize import normalize_text
 
-    resolver = blob_resolver or (lambda ref: corpus.render_media_blob(ref))
+    resolver = blob_resolver or corpus.render_media_blob
+    read_pages = _page_reader(pdf_rasterizer, pdf_zoom, pdf_max_pages)
+    ocr_cols = OCR_SCHEMA.fieldNames()
+    cols = (OCR_NER_SCHEMA if gazetteer is not None else OCR_SCHEMA).fieldNames()
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tagger = None
@@ -119,147 +180,52 @@ def make_ocr_stage(
             from ner_ocr_spark.kernels.ner import GazetteerTagger
 
             tagger = GazetteerTagger(gazetteer)
-        cols = list(OCR_SCHEMA.fieldNames())
-        if tagger is not None:
-            cols += ["entities", "bio"]
         for pdf in batches:
             t0 = time.monotonic()
             out: dict[str, list] = {k: [] for k in cols}
 
-            def emit(doc_id, span_idx, line_idx, text, media_ref, box, score,
-                     error, t_text=None, t_score=None, kind=None):
+            def emit(row, line_idx, text=None, box=None, score=None,
+                     error=None, t_text=None, t_score=None):
+                if error is None:
+                    text = normalize_text(t_text) or normalize_text(text)
                 if tagger is not None:
-                    if error is not None:
-                        # error rows are mode-invariant: no normalization,
-                        # no tagging — text/entities/bio stay NULL exactly
-                        # as the non-fused path leaves them
+                    if error is None:
+                        ents, bio = tagger.tag(text)
+                        out["entities"].append(_entity_rows(ents))
+                        out["bio"].append(bio)
+                    else:
                         out["entities"].append(None)
                         out["bio"].append(None)
-                    else:
-                        # P4 for real: the enhanced text wins when it
-                        # normalizes non-blank (python twin of
-                        # operators/normalize.refined_text_expr)
-                        text = normalize_text(t_text) or normalize_text(text)
-                        if not text:
-                            return  # blank-after-normalize filter (fused)
-                        ents, bio = tagger.tag(text)
-                        out["entities"].append(
-                            [{"entity_type": e.entity_type, "surface": e.surface,
-                              "start": e.start, "end": e.end} for e in ents]
-                        )
-                        out["bio"].append(bio)
-                out["doc_id"].append(doc_id)
-                out["span_idx"].append(span_idx)
-                out["line_idx"].append(line_idx)
-                out["kind"].append(kind if kind is not None else kind_label)
-                out["text"].append(text)
-                out["media_ref"].append(media_ref)
-                out["box"].append(box)
-                out["score"].append(score)
-                out["transformer_text"].append(t_text)
-                out["transformer_score"].append(t_score)
-                out["error"].append(error)
+                for k, v in zip(ocr_cols, (
+                    row.doc_id, int(row.span_idx), line_idx, row.kind, text,
+                    row.media_ref, box, score, t_text, t_score, error,
+                )):
+                    out[k].append(v)
 
-            has_png = "image_png" in pdf.columns
-            has_base = "line_base" in pdf.columns
-            has_kind = "kind" in pdf.columns
-            has_pre_err = "error" in pdf.columns
             for row in pdf.itertuples(index=False):
-                base = int(row.line_base) if has_base and row.line_base is not None and not pd.isna(row.line_base) else 0
-                rk = row.kind if has_kind else None
-                if has_pre_err and isinstance(row.error, str):
-                    # upstream stage (pdf rasterizer) already failed this
-                    # span: pass the error row through untouched
-                    emit(row.doc_id, int(row.span_idx), base, None,
-                         row.media_ref, None, None, row.error, kind=rk)
-                    continue
-                if time.monotonic() - t0 > batch_timeout_s:
-                    emit(row.doc_id, int(row.span_idx), base, None, row.media_ref,
-                         None, None, "timeout: batch OCR budget exceeded", kind=rk)
-                    continue
-                if has_png and row.image_png is None and has_base:
-                    # pdf branch (line_base column present): a successfully
-                    # parsed ZERO-page PDF arrives as one posexplode_outer
-                    # row with NULL image and NULL error. Falling back to
-                    # the resolver here would decode the raw PDF blob as an
-                    # image and manufacture a spurious error row (round-2
-                    # ADVICE) — emit a clean no-lines row instead.
-                    emit(row.doc_id, int(row.span_idx), base, None,
-                         row.media_ref, None, 0.0, None, kind=rk)
+                if time.monotonic() - t0 >= BATCH_TIMEOUT_S:
+                    emit(row, 0, error="timeout: batch OCR budget exceeded")
                     continue
                 try:
-                    raw = bytes(
-                        row.image_png
-                        if has_png and row.image_png is not None
-                        else resolver(row.media_ref)
-                    )
-                    if pdf_rasterizer is not None and raw[:5] == b"%PDF-":
-                        pages = pdf_rasterizer(raw, pdf_zoom)
-                        if pdf_max_pages is not None:
-                            pages = pages[: int(pdf_max_pages)]
-                        if not pages:
-                            # zero-page PDF: one clean no-lines row
-                            emit(row.doc_id, int(row.span_idx), base, None,
-                                 row.media_ref, None, 0.0, None, kind=rk)
-                            continue
-                        page_imgs = [(pi * 100000, p) for pi, p in enumerate(pages)]
-                    else:
-                        page_imgs = [(0, raw)]
-                    for page_base, png in page_imgs:
-                        if isinstance(png, str):
-                            # born-digital PDF page: the rasterizer hook
-                            # (pdfio_page_source) extracted the text layer
-                            # directly — emit its lines EXACTLY, score 1.0,
-                            # no OCR (cheaper AND error-free vs the
-                            # reference's rasterize-then-OCR for these
-                            # pages). A text page with no lines mirrors
-                            # the no-lines OCR row.
-                            tlines = [l for l in png.split("\n") if l]
-                            if not tlines:
-                                emit(row.doc_id, int(row.span_idx),
-                                     base + page_base, None, row.media_ref,
-                                     None, 0.0, None, kind=rk)
-                            for li, tline in enumerate(tlines):
-                                emit(row.doc_id, int(row.span_idx),
-                                     base + page_base + li, tline,
-                                     row.media_ref, None, 1.0, None,
-                                     kind=rk)
-                            continue
-                        lines = ocr.ocr_page(bytes(png), max_side_limit)
-                        t_lines = None
-                        if refine_below is not None and lines and any(
-                            lr.score < refine_below for lr in lines
-                        ):
-                            # M2 analog: score-gated second pass with a finer
-                            # deskew grid; results ride transformer_text/score
-                            # per line (never overwrite the first pass)
-                            t_lines = _second_pass(bytes(png), max_side_limit, ocr)
-                            if t_lines is not None and len(t_lines) != len(lines):
-                                # segmentation changed -> per-line alignment is
-                                # undefined; keep whichever whole pass scored
-                                # higher as the first pass, attach no transformer
-                                s1 = sum(lr.score for lr in lines) / max(len(lines), 1)
-                                s2 = sum(lr.score for lr in t_lines) / max(len(t_lines), 1)
-                                if s2 > s1:
-                                    lines = t_lines
-                                t_lines = None
+                    payload = getattr(row, "image_png", None)
+                    pages = read_pages(bytes(
+                        payload if payload is not None else resolver(row.media_ref)
+                    ))
+                    if not pages:
+                        emit(row, 0, score=0.0)
+                    for pi, page in enumerate(pages):
+                        base = pi * PAGE_STRIDE
+                        lines, t_lines = _recognize(page, refine_below)
                         if not lines:
-                            emit(row.doc_id, int(row.span_idx), base + page_base,
-                                 None, row.media_ref, None, 0.0, None, kind=rk)
+                            emit(row, base, score=0.0)
                         for li, lr in enumerate(lines):
-                            if min_score is not None and lr.score < min_score:
-                                continue
-                            tt = t_lines[li].text if t_lines is not None else None
-                            ts = float(t_lines[li].score) if t_lines is not None else None
-                            emit(row.doc_id, int(row.span_idx),
-                                 base + page_base + li, lr.text,
-                                 row.media_ref, lr.box, float(lr.score), None,
-                                 tt, ts, kind=rk)
+                            tl = t_lines[li] if t_lines is not None else None
+                            emit(row, base + li, lr.text, lr.box, float(lr.score),
+                                 t_text=None if tl is None else tl.text,
+                                 t_score=None if tl is None else float(tl.score))
                 except Exception as e:  # noqa: BLE001 — M6 row-level absorption
-                    emit(row.doc_id, int(row.span_idx), base, None, row.media_ref,
-                         None, None, f"{type(e).__name__}: {e}", kind=rk)
-            # object dtype per column: a batch whose rows were ALL dropped
-            # (blank-after-normalize, zero-page PDFs) otherwise yields empty
+                    emit(row, 0, error=f"{type(e).__name__}: {e}")
+            # object dtype per column: an empty batch otherwise yields empty
             # float64 columns that Arrow cannot convert to list/struct types
             # ("NumPyConverter doesn't implement list<double>")
             yield pd.DataFrame(
@@ -269,50 +235,28 @@ def make_ocr_stage(
     return stage
 
 
-def _second_pass(png: bytes, max_side_limit: int, ocr):
-    """Fine-step re-recognition (reference TrOCR enhancement analog,
-    /root/reference/src/ui/app.py:525-538). Returns the refined line list,
-    or None on failure (caller keeps the first pass — error absorption)."""
-    import numpy as np
-
-    try:
-        gray = ocr.bounded_resize(ocr.decode_gray(png), max_side_limit)
-        mask = ocr.despeckle(ocr.binarize(gray))
-        angle = ocr.estimate_skew(mask, step=0.05)
-        if abs(angle) > 1e-9:
-            gray = ocr.rotate_gray(gray, angle, int(np.median(gray)))
-            mask = ocr.despeckle(ocr.binarize(gray))
-        return ocr.recognize_mask(mask)
-    except Exception:  # noqa: BLE001 — keep the first pass on failure
-        return None
-
-
 def make_refine_stage(
     blob_resolver: Callable[[str], bytes] | None = None,
-    max_side_limit: int = 1500,
-    fine_step: float = 0.05,
     pdf_rasterizer: Callable[[bytes, float], list[bytes]] | str | None = "auto",
     pdf_zoom: float = 2.0,
     pdf_max_pages: int | None = None,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """Second-pass refinement (reference M2 / TrOCR analog,
     /root/reference/src/transformer_ocr.py:189-283): re-recognize a page
-    with a finer deskew grid and record the result in transformer_text /
+    with kernels/ocr.ocr_page_fine and record the result in transformer_text /
     transformer_score (never overwriting the first pass — OCRResult carries
     both, /root/reference/src/custom_types/data.py:20-21; downstream P4
     coalesce picks the winner). The caller filters to low-score rows first
     (two-pass enhancement pruning, SURVEY.md §4.3.4 — each region enhanced
     exactly ONCE, unlike the reference CLI's accidental O(k^2) loop).
 
-    PDF-derived rows refine too: a resolved blob sniffing %PDF- is
-    rasterized (pdf_rasterizer: "auto" = pypdfium2 else the from-scratch
-    pdfio extractor, mirroring pipeline.extract_spans) and each row's page
-    comes from its line_idx base (page_idx * 100000 + line — the pdf branch
-    ordering invariant), so workbench enhancement covers pdf pages with the
-    same semantics as native media. pdf_rasterizer=None keeps pdf rows
-    untouched (their rasterization attempt fails closed to []);
-    pdf_max_pages truncates rasterization the same way the first pass did
-    (rows past it cannot exist, so rasterizing those pages is pure waste).
+    PDF-derived rows refine too: blobs expand to pages through the same
+    _page_reader as the OCR stage, and each row's page comes from its
+    line_idx base (page_idx * PAGE_STRIDE + line), so workbench enhancement
+    covers pdf pages with the same semantics as native media.
+    pdf_rasterizer=None keeps pdf rows untouched (the PDF blob fails to
+    decode as an image, which refines to no lines). Born-digital text
+    pages are skipped: their first-pass rows are exact, score 1.0.
 
     When an input batch carries an `image_png` column (the blobs= media
     path, where payloads ride the rows instead of resolving by ref), the
@@ -327,11 +271,8 @@ def make_refine_stage(
     from ner_ocr_spark import corpus
     from ner_ocr_spark.kernels import ocr
 
-    resolver = blob_resolver or (lambda ref: corpus.render_media_blob(ref))
-    if pdf_rasterizer == "auto":
-        from ner_ocr_spark.operators.pdf import default_page_source
-
-        pdf_rasterizer = default_page_source()
+    resolver = blob_resolver or corpus.render_media_blob
+    read_pages = _page_reader(pdf_rasterizer, pdf_zoom, pdf_max_pages)
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from collections import OrderedDict
@@ -352,17 +293,7 @@ def make_refine_stage(
             if ref in page_cache:
                 page_cache.move_to_end(ref)
                 return page_cache[ref]
-            raw = bytes(payload) if payload is not None else bytes(resolver(ref))
-            if pdf_rasterizer is not None and raw[:5] == b"%PDF-":
-                # text pages (str from pdfio_page_source) ride through as
-                # str — refined_lines skips them (their first-pass rows are
-                # exact, score 1.0; nothing to refine)
-                pages = [p if isinstance(p, str) else bytes(p)
-                         for p in pdf_rasterizer(raw, pdf_zoom)]
-                if pdf_max_pages is not None:
-                    pages = pages[: int(pdf_max_pages)]
-            else:
-                pages = [raw]
+            pages = read_pages(bytes(payload if payload is not None else resolver(ref)))
             page_cache[ref] = pages
             if len(page_cache) > page_cap:
                 page_cache.popitem(last=False)
@@ -378,15 +309,7 @@ def make_refine_stage(
                 if page >= len(pages) or isinstance(pages[page], str):
                     lines = []
                 else:
-                    gray = ocr.bounded_resize(
-                        ocr.decode_gray(pages[page]), max_side_limit
-                    )
-                    mask = ocr.despeckle(ocr.binarize(gray))
-                    angle = ocr.estimate_skew(mask, step=fine_step)
-                    if abs(angle) > 1e-9:
-                        gray = ocr.rotate_gray(gray, angle, int(np.median(gray)))
-                        mask = ocr.despeckle(ocr.binarize(gray))
-                    lines = ocr.recognize_mask(mask)
+                    lines = ocr.ocr_page_fine(pages[page])
             except Exception:  # noqa: BLE001
                 lines = []
             line_cache[key] = lines
@@ -414,13 +337,13 @@ def make_refine_stage(
                             payload = v
                             break
                 li = li_all[pos]
-                pg = li // 100000  # 0 for native media, page_idx for pdf rows
+                pg = li // PAGE_STRIDE  # 0 for native media, page_idx for pdf rows
                 for page in np.unique(pg):
                     lines = refined_lines(ref, int(page), payload)
                     if not lines:
                         continue
                     on_page = pg == page
-                    lp = li[on_page] % 100000
+                    lp = li[on_page] % PAGE_STRIDE
                     in_range = (lp < len(lines)) & ok_all[pos][on_page]
                     # Pairing rows to refined lines. Fast path: when the
                     # fine-deskew segmentation agrees with the first pass,
@@ -487,75 +410,71 @@ def make_refine_stage(
 
 
 def make_ner_stage(
-    gazetteer: list[tuple[str, str]],
+    gazetteer: list[tuple[str, str]] | None,
     text_col: str = "text",
     passthrough: T.StructType | None = None,
 ) -> tuple[Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]], T.StructType]:
-    """Build the NER mapInPandas function + its output schema.
+    """Build the text-side mapInPandas function + its output schema.
 
-    Appends `entities` (array<struct>) and `bio` (tag string) to every input
-    row. The gazetteer rides the closure (broadcast by Spark's task
-    serialization — it is small); the token trie builds once per worker.
+    kind='html' rows (when the batch has a `kind` column) arrive with raw
+    markup: main-content extraction and the python normalizer twin run
+    here, in the same crossing. Blank results drop; a failing page becomes
+    an error row (error "html: <Type>: <msg>", text NULL — M6).
+
+    With a gazetteer, appends `entities` (array<struct>) and `bio` (tag
+    string) to every row; error rows get NULLs. The gazetteer rides the
+    closure (broadcast by Spark's task serialization — it is small); the
+    token trie builds once per worker. gazetteer=None skips tagging and
+    returns the passthrough schema unchanged (the pipeline's no-NER mode).
     """
     if passthrough is None:
         raise ValueError("passthrough schema required (input schema of the stage)")
-    schema = T.StructType(
-        list(passthrough.fields)
-        + [T.StructField("entities", ENTITY_TYPE, True),
-           T.StructField("bio", T.StringType(), True)]
+    from ner_ocr_spark import htmlx
+
+    schema = passthrough if gazetteer is None else T.StructType(
+        list(passthrough.fields) + NER_FIELDS
     )
+    # bound here, not in the worker: the closure ships the extractor the
+    # caller saw, so a replaced htmlx.main_text reaches the executors too
+    main_text = htmlx.main_text
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ner_ocr_spark.kernels.ner import GazetteerTagger
+        from ner_ocr_spark.kernels.normalize import normalize_text
 
-        tagger = GazetteerTagger(gazetteer)
+        tagger = GazetteerTagger(gazetteer) if gazetteer is not None else None
         for pdf in batches:
-            if "kind" in pdf.columns:
-                mask = (pdf["kind"] == "html").to_numpy()
-                if mask.any():
-                    # kind='html' rows reach this stage with RAW markup:
-                    # main-content extraction + the python normalizer twin
-                    # ride the SAME crossing (a separate Arrow stage would
-                    # re-scan the source — pipeline comment); blanks drop,
-                    # failures absorb per row (M6: error set, text NULL)
-                    from ner_ocr_spark.htmlx import main_text
-                    from ner_ocr_spark.kernels.normalize import (
-                        normalize_text,
-                    )
-
-                    texts, errs = [], []
-                    for h in pdf.loc[mask, text_col]:
-                        try:
-                            texts.append(normalize_text(main_text(h)))
-                            errs.append(None)
-                        except Exception as e:  # noqa: BLE001
-                            texts.append(None)
-                            errs.append(f"html: {type(e).__name__}: {e}")
-                    pdf = pdf.copy()
-                    pdf.loc[mask, text_col] = texts
-                    if "error" in pdf.columns:
-                        pdf.loc[mask, "error"] = errs
-                    keep = ~(
-                        mask & (pdf[text_col].fillna("") == "")
-                        & pdf.get("error", pd.Series(index=pdf.index,
-                                                     dtype=object)).isna()
-                    )
-                    pdf = pdf[keep]
+            has_error = "error" in pdf.columns
+            html = (pdf["kind"] == "html").to_numpy() if "kind" in pdf.columns else None
+            if html is not None and html.any():
+                texts, errs = [], []
+                for h in pdf.loc[html, text_col]:
+                    try:
+                        texts.append(normalize_text(main_text(h)))
+                        errs.append(None)
+                    except Exception as e:  # noqa: BLE001
+                        texts.append(None)
+                        errs.append(f"html: {type(e).__name__}: {e}")
+                pdf = pdf.copy()
+                pdf.loc[html, text_col] = texts
+                if has_error:
+                    pdf.loc[html, "error"] = errs
+                blank = pdf[text_col].fillna("") == ""
+                if has_error:
+                    blank &= pdf["error"].isna()
+                pdf = pdf[~(html & blank)]
+            if tagger is None:
+                yield pdf
+                continue
             ents_col, bio_col = [], []
             for text in pdf[text_col]:
                 ents, bio = tagger.tag(text if isinstance(text, str) else "")
-                ents_col.append(
-                    [
-                        {"entity_type": e.entity_type, "surface": e.surface,
-                         "start": e.start, "end": e.end}
-                        for e in ents
-                    ]
-                )
+                ents_col.append(_entity_rows(ents))
                 bio_col.append(bio)
             pdf = pdf.copy()
             pdf["entities"] = ents_col
             pdf["bio"] = bio_col
-            if "error" in pdf.columns:
+            if has_error:
                 # M6: error rows never gain tagging output
                 em = pdf["error"].notna()
                 if em.any():

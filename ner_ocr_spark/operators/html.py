@@ -35,27 +35,6 @@ def _main_text_udf(htmls: pd.Series) -> pd.Series:
     return htmls.map(one)
 
 
-@pandas_udf("text string, error string")
-def _main_text_err_udf(htmls: pd.Series) -> pd.DataFrame:
-    """Error-carrying twin of `_main_text_udf` for the pipeline's no-NER
-    html branch: a failing page must become an ERROR ROW (text NULL,
-    error set — same "html: <Type>: <msg>" format the fused NER stage
-    writes), never a silently dropped row, so span sequences stay
-    identical between NER modes for malformed HTML (M6 mode
-    invariance)."""
-    from ner_ocr_spark.htmlx import main_text
-
-    texts, errs = [], []
-    for h in htmls:
-        try:
-            texts.append(main_text(h))
-            errs.append(None)
-        except Exception as e:  # noqa: BLE001 — per-row absorption (M6)
-            texts.append(None)
-            errs.append(f"html: {type(e).__name__}: {e}")
-    return pd.DataFrame({"text": texts, "error": errs})
-
-
 def extract_main_content(
     df: DataFrame, html_col: str = "html", out_col: str = "main_text"
 ) -> DataFrame:

@@ -15,8 +15,8 @@ zoom=2.0, truncated to `max_num_imgs` pages; dispatched for '.pdf' at
 
   * the rasterizer runs inside ONE mapInPandas stage emitting an
     array<binary> of page PNGs per document (payload bytes never shuffle —
-    the stage is map-only and pages feed the OCR stage on the same
-    executor pass);
+    the stage is map-only, so pages stay on the executor that rasterized
+    them);
   * `max_num_imgs` is applied JVM-side with F.slice before posexplode —
     the reference's list truncation as a Catalyst expression;
   * no rasterizer backend in the container is an honest per-row error
@@ -233,7 +233,7 @@ def pdf_to_pages(
     Single posexplode_outer over ONE mapInPandas output: a filter-fork
     into separate ok/err DataFrames would execute the rasterizer stage
     TWICE (each consumer re-runs the plan) — the error rows instead ride
-    the same stream and the downstream OCR stage passes them through."""
+    the same stream; consumers split pages from failures on `error`."""
     raw = pdf_spans.mapInPandas(
         make_pdf_stage(rasterizer, blob_resolver, zoom), PDF_PAGES_SCHEMA
     )

@@ -23,6 +23,8 @@ import pandas as pd  # noqa: F401 — pandas_udf resolves 'pd.Series' hints here
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ner_ocr_spark.operators.names import temp_names
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -56,20 +58,21 @@ def brute_force_topk(
     # cosine_expr re-folded ||a|| and ||b|| per PAIR — 3 interpreted
     # O(dim) folds per pair instead of 1; same doubles, so the rounded
     # output is bit-identical (guide §1.2 "don't compute things twice")
+    vn, qn = temp_names([vectors, queries], "_vn", "_qn")
     q = F.broadcast(
         queries.select(F.col(qid_col), F.col(qvec_col))
-        .withColumn("_qn", _norm(F.col(qvec_col)))
+        .withColumn(qn, _norm(F.col(qvec_col)))
     )
     scored = (
         vectors.select(F.col(id_col), F.col(vec_col))
-        .withColumn("_vn", _norm(F.col(vec_col)))
+        .withColumn(vn, _norm(F.col(vec_col)))
         .crossJoin(q)
         .select(
             qid_col,
             id_col,
             F.round(
                 _dot(F.col(vec_col), F.col(qvec_col))
-                / (F.col("_vn") * F.col("_qn")),
+                / (F.col(vn) * F.col(qn)),
                 4,
             ).alias("cosine"),
         )
@@ -158,9 +161,10 @@ def lsh_topk(
     broadcast probe rows per query (the VECTORS side still maps once and
     never shuffles; only the tiny query side fans out)."""
     planes = _hyperplanes(dim, n_planes)
+    vn, qn = temp_names([vectors, queries], "_vn", "_qn")
     v = vectors.withColumn(
         "bucket", srp_bucket_expr(F.col(vec_col), planes)
-    ).withColumn("_vn", _norm(F.col(vec_col)))
+    ).withColumn(vn, _norm(F.col(vec_col)))
     qb = srp_bucket_expr(F.col(qvec_col), planes)
     if multi_probe:
         # flip masks via a HOF so the 512-term bucket expression appears
@@ -173,12 +177,12 @@ def lsh_topk(
         q = F.broadcast(
             queries.select(
                 qid_col, qvec_col, F.explode(probes).alias("bucket")
-            ).withColumn("_qn", _norm(F.col(qvec_col)))
+            ).withColumn(qn, _norm(F.col(qvec_col)))
         )
     else:
         q = F.broadcast(
             queries.withColumn("bucket", qb)
-            .withColumn("_qn", _norm(F.col(qvec_col)))
+            .withColumn(qn, _norm(F.col(qvec_col)))
         )
     # no distinct needed: a vector owns ONE bucket and the probe buckets
     # are pairwise different, so each (query, vector) pair meets at most
@@ -190,7 +194,7 @@ def lsh_topk(
         id_col,
         F.round(
             _dot(F.col(vec_col), F.col(qvec_col))
-            / (F.col("_vn") * F.col("_qn")),
+            / (F.col(vn) * F.col(qn)),
             4,
         ).alias("cosine"),
     )
@@ -425,16 +429,17 @@ def ivf_topk(
         centroids = train_ivf_centroids(
             vectors, n_centroids, id_col=id_col, vec_col=vec_col
         )
+    vn, qn = temp_names([vectors, queries], "_vn", "_qn")
     v = vectors.withColumn(
         "_ivf", ivf_assign_udf(centroids)(F.col(vec_col))
-    ).withColumn("_vn", _norm(F.col(vec_col)))
+    ).withColumn(vn, _norm(F.col(vec_col)))
     probes = F.broadcast(
         queries.select(
             qid_col, qvec_col,
             F.explode(
                 ivf_probe_udf(centroids, n_probe)(F.col(qvec_col))
             ).alias("_ivf"),
-        ).withColumn("_qn", _norm(F.col(qvec_col)))
+        ).withColumn(qn, _norm(F.col(qvec_col)))
     )
     # norms ride the join sides (round 6: one O(dim) fold per pair, not 3;
     # bit-identical — see brute_force_topk)
@@ -443,7 +448,7 @@ def ivf_topk(
         id_col,
         F.round(
             _dot(F.col(vec_col), F.col(qvec_col))
-            / (F.col("_vn") * F.col("_qn")),
+            / (F.col(vn) * F.col(qn)),
             4,
         ).alias("cosine"),
     )

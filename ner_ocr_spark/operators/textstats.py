@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ner_ocr_spark.operators.names import temp_names
 from ner_ocr_spark.operators.normalize import WS_RUN
 
 _STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "with"]
@@ -59,7 +60,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     re-ran the split regex 4-5x per row — the multi-referenced intermediate
     columns below block CollapseProject, so the split happens once."""
     t = F.col(text_col)
-    w_col, nw_col, ns_col = "_qf_words", "_qf_nw", "_qf_ns"
+    w_col, nw_col, ns_col = temp_names([df], "_qf_words", "_qf_nw", "_qf_ns")
     stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
     words = F.col(w_col)
     staged = df.withColumn(w_col, words_expr(t)).withColumns(
@@ -107,7 +108,7 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     zero-evidence falls back to 'en'. Pure expressions; the distinct word
     array materializes once (round 6 — it was inlined into all five
     per-language intersects, re-splitting the text 5x per row)."""
-    w_col = "_li_words"
+    w_col, b_col = temp_names([df], "_li_words", "_li_best")
     df = df.withColumn(
         w_col, F.array_distinct(words_expr(F.col(text_col)))
     )
@@ -126,7 +127,6 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     # so equal hit counts resolve by the explicit priority — never by the
     # accidental lang-string ordering. `best` materializes too: its two
     # field accesses would otherwise duplicate the whole argmax tree.
-    b_col = "_li_best"
     df = df.withColumn(b_col, F.array_max(F.array(*scores)))
     best = F.col(b_col)
     return df.withColumn(

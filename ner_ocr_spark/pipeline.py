@@ -2,10 +2,15 @@
 
     documents(doc_id, spans array<struct<kind,text,media_ref,offset>>)
       -> posexplode (span_idx mints the order the invariant needs)
-      -> route kind: text -> JVM normalizer; media -> repartition(doc_id,
-         span_idx) [skew defusal] -> mapInPandas OCR -> same normalizer
-      -> unionByName -> mapInPandas NER (gazetteer+BIO)
+      -> route kind:
+           text/html -> JVM normalizer (text) -> mapInPandas html
+                        extraction + normalizer twin (html) [+ NER]
+           media/pdf -> repartition(doc_id, span_idx) [skew defusal]
+                        -> mapInPandas OCR + normalizer twin [+ NER]
+      -> unionByName
       -> assemble: groupBy(doc_id) sort_array(collect_list(...))
+
+The same plan runs in both NER modes; with_ner only switches tagging on.
 
 Two shuffles total: the media-branch repartition and the assembly groupBy.
 Span order is carried explicitly via (span_idx, line_idx) — never partition
@@ -28,12 +33,12 @@ from pyspark.sql import functions as F
 
 from ner_ocr_spark import corpus as corpus_mod
 from ner_ocr_spark.operators.extract import (
+    OCR_NER_SCHEMA,
     OCR_SCHEMA,
     make_ner_stage,
     make_ocr_stage,
-    ocr_ner_schema,
 )
-from ner_ocr_spark.operators.normalize import normalize_expr, refined_text_expr
+from ner_ocr_spark.operators.normalize import normalize_expr
 
 SPAN_COLS = ["doc_id", "span_idx", "line_idx", "kind", "text", "media_ref",
              "box", "score", "transformer_text", "transformer_score", "error"]
@@ -97,10 +102,6 @@ def extract_spans(
     media branch and the image sniff rejects them per row).
     """
     spark = documents.sparkSession
-    if pdf_rasterizer == "auto":
-        from ner_ocr_spark.operators.pdf import default_page_source
-
-        pdf_rasterizer = default_page_source()
     spans = explode_spans(documents)
 
     # media-branch width: defaults to spark.sql.shuffle.partitions. At
@@ -114,21 +115,28 @@ def extract_spans(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
 
+    # with_ner decides only the gazetteer and the output columns: both
+    # modes run the same plan (one scan per branch, two python crossings)
+    gaz = None
+    if with_ner:
+        gaz = gazetteer if gazetteer is not None else corpus_mod.GAZETTEER
+    ner_cols = ["entities", "bio"] if with_ner else []
+
     # -- text + html branch (ONE source consumer: a third filter-fork of
     # `spans` re-scans and re-explodes the source — measured +16% on the
     # e2e wall for a corpus with zero html spans). text rows normalize
     # JVM-side (codegen); kind='html' rows carry their RAW markup through
     # this projection — main-content extraction (north rule: boilerplate
-    # strip / DOM heuristics) happens inside the NER stage's existing
-    # python crossing (with_ner) or in a dedicated Arrow branch (no-NER
-    # path below), never as an extra stage over text rows.
+    # strip / DOM heuristics) and its normalization happen inside the
+    # text-side python crossing (make_ner_stage), which also tags when
+    # with_ner.
     # SLIM projection through the python boundary (guide §4.1: pass only
     # the columns the function needs): every other SPAN_COLS field is a
     # literal for text/html rows (line_idx 0, score 1.0, the rest NULL) —
-    # round 6 re-attaches them JVM-side after the NER crossing instead of
+    # round 6 re-attaches them JVM-side after the crossing instead of
     # serializing half a million NULL/object cells each way (the
     # passthrough round-trip alone measured 1.5 s at sf1). `error` stays:
-    # the NER stage SETS it for failed html rows.
+    # the stage SETS it for failed html rows.
     text_branch = (
         spans.filter(F.col("kind").isin(["text", "html"]))
         .select(
@@ -142,24 +150,21 @@ def extract_spans(
         )
         .filter((F.col("kind") == "html") | (F.length("text") > 0))
     )
-
-    def widen_text_rows(df: DataFrame, extra: list[str]) -> DataFrame:
-        """Re-attach the literal span columns the slim text branch left
-        out, restoring SPAN_COLS order (+ NER extras when present)."""
-        return df.select(
-            "doc_id",
-            "span_idx",
-            F.lit(0).alias("line_idx"),
-            "kind",
-            "text",
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(None).cast("array<double>").alias("box"),
-            F.lit(1.0).alias("score"),
-            F.lit(None).cast("string").alias("transformer_text"),
-            F.lit(None).cast("double").alias("transformer_score"),
-            "error",
-            *extra,
-        )
+    ner_fn, ner_schema = make_ner_stage(gaz, passthrough=text_branch.schema)
+    text_rows = text_branch.mapInPandas(ner_fn, ner_schema).select(
+        "doc_id",
+        "span_idx",
+        F.lit(0).alias("line_idx"),
+        "kind",
+        "text",
+        F.lit(None).cast("string").alias("media_ref"),
+        F.lit(None).cast("array<double>").alias("box"),
+        F.lit(1.0).alias("score"),
+        F.lit(None).cast("string").alias("transformer_text"),
+        F.lit(None).cast("double").alias("transformer_score"),
+        "error",
+        *ner_cols,
+    )
 
     # -- media branch: spread heavy docs, then batched OCR ----------------
     # pdf spans ride the SAME branch: the OCR stage sniffs %PDF- blobs and
@@ -183,78 +188,22 @@ def extract_spans(
         # (doc_id, span_idx) hash-spread = salted repartition: a
         # 1000-media-span doc lands on ~all partitions, not one straggler
         media = media.repartition(n_part, "doc_id", "span_idx")
-    # refinement AND (when with_ner) normalize+NER happen INSIDE the OCR
-    # stage: a filter-fork into a second mapInPandas would re-execute the
-    # whole OCR plan on both branches, and a separate NER stage would make
-    # media rows cross the Python boundary twice (§4.3.4; each page
-    # refined exactly once, each row tagged exactly once)
-    gaz = gazetteer if gazetteer is not None else corpus_mod.GAZETTEER
-
-    def run_ocr(df, schema, fused_gaz):
-        return df.mapInPandas(
-            make_ocr_stage(blob_resolver, refine_below=refine_below,
-                           gazetteer=fused_gaz,
-                           pdf_rasterizer=pdf_rasterizer,
-                           pdf_max_pages=pdf_max_pages, pdf_zoom=pdf_zoom),
-            schema,
-        )
-
-    if with_ner:
-        ocr_rows = run_ocr(media, ocr_ner_schema(), gaz)
-        # normalize + blank-filter already applied in-stage (python twin)
-        media_branch = ocr_rows.filter(
-            (F.length("text") > 0) | F.col("error").isNotNull()
-        )
-        ner_fn, ner_schema = make_ner_stage(gaz, passthrough=text_branch.schema)
-        text_tagged = widen_text_rows(
-            text_branch.mapInPandas(ner_fn, ner_schema), ["entities", "bio"]
-        )
-        return text_tagged.unionByName(media_branch).select(
-            *SPAN_COLS, "entities", "bio"
-        )
-    ocr_rows = run_ocr(media, OCR_SCHEMA, None)
-    # P4 coalesce (JVM-side): enhanced text wins only when it normalizes
-    # non-blank; error rows keep text untouched (mode-invariant with the
-    # fused path, which skips normalization on error)
-    media_branch = ocr_rows.withColumn(
-        "text",
-        F.when(F.col("error").isNotNull(), F.col("text")).otherwise(
-            refined_text_expr(F.col("transformer_text"), F.col("text"))
-        ),
-    ).filter((F.length("text") > 0) | F.col("error").isNotNull())
-    # no-NER path: html rows still carry raw markup — extract via a
-    # dedicated Arrow branch (asNondeterministic pins ONE evaluation: the
-    # blank filter would otherwise push below the projection and run the
-    # UDF twice, and field accesses on the struct would duplicate it).
-    # This forks text_branch (one extra scan) — only on this secondary
-    # path; the with_ner path extracts inside the NER stage. Failures
-    # become ERROR ROWS (text NULL, error set) exactly like the fused
-    # path — dropping them silently would make span sequences differ
-    # between NER modes for malformed HTML (M6 mode invariance).
-    from ner_ocr_spark.operators.html import _main_text_err_udf
-
-    _main_once = _main_text_err_udf.asNondeterministic()
-    texts_only = widen_text_rows(
-        text_branch.filter(F.col("kind") == "text"), []
+    # refinement, normalization (P4) and, with a gazetteer, NER happen
+    # INSIDE the OCR stage: a filter-fork into a second mapInPandas would
+    # re-execute the whole OCR plan on both branches, and a separate NER
+    # stage would make media rows cross the Python boundary twice
+    # (§4.3.4; each page refined exactly once, each row tagged exactly
+    # once). The stage keeps blank rows; the filter drops them.
+    ocr_rows = media.mapInPandas(
+        make_ocr_stage(blob_resolver, refine_below=refine_below,
+                       gazetteer=gaz, pdf_rasterizer=pdf_rasterizer,
+                       pdf_max_pages=pdf_max_pages, pdf_zoom=pdf_zoom),
+        OCR_NER_SCHEMA if with_ner else OCR_SCHEMA,
     )
-    htmls = widen_text_rows(
-        text_branch.filter(F.col("kind") == "html")
-        .withColumn("_hx", _main_once(F.col("text")))
-        .withColumn("error", F.col("_hx.error"))
-        .withColumn(
-            "text",
-            F.when(F.col("_hx.error").isNotNull(),
-                   F.lit(None).cast("string"))
-            .otherwise(normalize_expr(F.col("_hx.text"))),
-        )
-        .drop("_hx")
-        .filter((F.length("text") > 0) | F.col("error").isNotNull()),
-        [],
+    media_branch = ocr_rows.filter(
+        (F.length("text") > 0) | F.col("error").isNotNull()
     )
-    return (
-        texts_only.unionByName(htmls).unionByName(media_branch)
-        .select(*SPAN_COLS)
-    )
+    return text_rows.unionByName(media_branch).select(*SPAN_COLS, *ner_cols)
 
 
 def assemble_documents(extracted: DataFrame) -> DataFrame:

@@ -119,7 +119,11 @@ class Workbench:
         matched set is search output: small, broadcastable)."""
         matched = self._require("search")
         ocr_rows = self._require("ocr")
-        from ner_ocr_spark.operators.extract import OCR_SCHEMA, make_refine_stage
+        from ner_ocr_spark.operators.extract import (
+            OCR_SCHEMA,
+            PAGE_STRIDE,
+            make_refine_stage,
+        )
 
         hit_refs = (
             ocr_rows.join(
@@ -152,11 +156,11 @@ class Workbench:
         from pyspark.sql import Window
 
         page_w = Window.partitionBy(
-            "media_ref", F.floor(F.col("line_idx") / 100000)
+            "media_ref", F.floor(F.col("line_idx") / PAGE_STRIDE)
         )
         refine_in = hit.select(*OCR_SCHEMA.fieldNames()).withColumn(
             "n_lines",
-            (F.max(F.col("line_idx") % 100000).over(page_w) + 1).cast("int"),
+            (F.max(F.col("line_idx") % PAGE_STRIDE).over(page_w) + 1).cast("int"),
         )
         if opts.get("blobs") is not None:
             # blobs= media path: payloads ride the rows (there may be no

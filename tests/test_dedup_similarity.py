@@ -375,3 +375,39 @@ def test_fingerprint_stop_hash_cap(spark):
     assert report  # the boilerplate hashes are reported...
     assert {r["bucket_df"] for r in report} == {50}  # ...at df = block size
     assert {r["pairs_avoided"] for r in report} == {50 * 49 // 2}
+
+
+def test_topk_temp_columns_never_clobber_caller_columns(spark):
+    """Caller columns named like the norm temporaries (`_vn`, `_qn`) are
+    neither overwritten nor made ambiguous: every top-k variant returns
+    what it returns for frames without the colliding names."""
+    import math
+
+    from ner_ocr_spark.operators.similarity import ivf_topk, train_ivf_centroids
+
+    vecs = [(i, [math.cos(0.1 * i * (j + 1)) for j in range(8)])
+            for i in range(40)]
+    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    q = emb.filter("vec_id in (7, 23)").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    # the embeddings themselves live in columns named _vn / _qn ...
+    emb_c = emb.withColumnRenamed("embedding", "_vn")
+    q_c = q.withColumnRenamed("query_vec", "_qn")
+    # ... or ride next to them as unrelated caller columns
+    emb_x = emb.withColumn("_qn", F.lit(-1.0)).withColumn("_vn", F.lit("x"))
+    q_x = q.withColumn("_vn", F.lit(-1.0)).withColumn("_qn", F.lit("y"))
+    cents = train_ivf_centroids(emb, n_centroids=4, sample_n=40)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(brute_force_topk(emb_c, q_c, k=3, vec_col="_vn",
+                                 qvec_col="_qn")) == \
+        rows(brute_force_topk(emb, q, k=3))
+    assert rows(brute_force_topk(emb_x, q_x, k=3)) == \
+        rows(brute_force_topk(emb, q, k=3))
+    assert rows(lsh_topk(emb_x, q_x, k=3, dim=8, n_planes=4)) == \
+        rows(lsh_topk(emb, q, k=3, dim=8, n_planes=4))
+    assert rows(ivf_topk(emb_x, q_x, k=3, centroids=cents)) == \
+        rows(ivf_topk(emb, q, k=3, centroids=cents))

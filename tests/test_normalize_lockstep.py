@@ -71,19 +71,24 @@ def test_lang_id_tie_priority(spark):
     assert got == {0: "de", 1: "zh", 2: "es", 3: "en", 4: "en"}
 
 
-def test_error_rows_mode_invariant(spark):
-    """A failing media span produces identical (text, error-shape) rows in
-    fused (with_ner=True) and non-fused modes — no normalization or tagging
-    runs on error rows (round-1 ADVICE)."""
+def test_error_rows_mode_invariant(spark, monkeypatch):
+    """A failing media span and a failing html span produce identical
+    (text, error-shape) rows in fused (with_ner=True) and non-fused modes
+    — no normalization or tagging runs on error rows (round-1 ADVICE)."""
     from tests.conftest import DOC_SCHEMA
 
-    from ner_ocr_spark import pipeline
+    from ner_ocr_spark import htmlx, pipeline
 
+    def broken_main_text(html):
+        raise ValueError("unparseable page")
+
+    monkeypatch.setattr(htmlx, "main_text", broken_main_text)
     docs = spark.createDataFrame(
         [{"doc_id": "d0",
           "spans": [
               {"kind": "text", "text": "HELLO WORLD", "media_ref": None, "offset": 0},
               {"kind": "media", "text": None, "media_ref": "bad/ref", "offset": 1},
+              {"kind": "html", "text": "<p>ALICE</p>", "media_ref": None, "offset": 2},
           ]}],
         DOC_SCHEMA,
     )
@@ -93,10 +98,13 @@ def test_error_rows_mode_invariant(spark):
 
     fused = pipeline.extract_spans(docs, blob_resolver=boom, with_ner=True)
     plain = pipeline.extract_spans(docs, blob_resolver=boom, with_ner=False)
-    frow = fused.filter("error is not null").collect()
-    prow = plain.filter("error is not null").collect()
-    assert len(frow) == len(prow) == 1
-    assert frow[0]["text"] is None and prow[0]["text"] is None
-    assert frow[0]["entities"] is None and frow[0]["bio"] is None
-    assert frow[0]["error"].startswith("RuntimeError")
-    assert frow[0]["error"] == prow[0]["error"]
+    frows = fused.filter("error is not null").orderBy("span_idx").collect()
+    prows = plain.filter("error is not null").orderBy("span_idx").collect()
+    assert len(frows) == len(prows) == 2
+    for f, p in zip(frows, prows):
+        assert f["text"] is None and p["text"] is None
+        assert f["entities"] is None and f["bio"] is None
+        assert (f["span_idx"], f["kind"], f["error"]) == \
+            (p["span_idx"], p["kind"], p["error"])
+    assert frows[0]["error"].startswith("RuntimeError")
+    assert frows[1]["error"] == "html: ValueError: unparseable page"

@@ -58,3 +58,33 @@ def test_short_text_single_window(spark):
     assert got[0] == got[1]
     assert got[0][1] != got[2][1]
     assert len(got[0][0]) == 1
+
+
+def test_quality_and_lang_id_keep_colliding_caller_columns(spark):
+    """Caller columns named like the operators' temporaries (`_qf_*`,
+    `_li_*`) survive untouched, and the features match a frame without
+    them."""
+    from ner_ocr_spark.operators.textstats import lang_id, quality_features
+
+    texts = ["the cat and the dog is with the bird", "der Hund und die Katze",
+             "x", ""]
+    base = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
+    )
+    temps = ["_qf_words", "_qf_nw", "_qf_ns", "_li_words", "_li_best"]
+    caller = base
+    for j, name in enumerate(temps):
+        caller = caller.withColumn(name, F.lit(f"caller-{j}"))
+
+    for op in (quality_features, lang_id):
+        want = {r["doc_id"]: r.asDict() for r in op(base).collect()}
+        got = op(caller)
+        assert got.columns == caller.columns + [
+            c for c in op(base).columns if c not in base.columns
+        ]
+        for r in got.collect():
+            d = r.asDict()
+            assert [d[n] for n in temps] == [
+                f"caller-{j}" for j in range(len(temps))
+            ]
+            assert {k: d[k] for k in want[r["doc_id"]]} == want[r["doc_id"]]
